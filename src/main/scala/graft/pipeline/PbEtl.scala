@@ -6,6 +6,7 @@ import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, VectorAssemble
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** The pb-etl dataflow re-expressed Spark-first (SURVEY.md §2, §7).
   *
@@ -93,22 +94,25 @@ object PbEtl {
   }
 
   /** P3 `the_norm` (pb_etl/tasks.py:235-244): divide each listed column
-    * by its training-set max. Pure column arithmetic — stays in
-    * whole-stage codegen; the 5 maxima travel as literals, the Spark
-    * analog of broadcasting the reference's 5-row frame.
+    * by its training-set max. Pure column arithmetic in one projection
+    * — stays in whole-stage codegen; the 5 maxima travel as literals,
+    * the Spark analog of broadcasting the reference's 5-row frame.
     *
     * Divergence (documented): when max == 0 the reference computes 0/0 =
     * NaN (pandas) which poisons training; we keep the column unscaled
     * instead — the intended semantics of "scale to [0,1]". */
   def theNorm(df: DataFrame, maxVal: Map[String, Double]): DataFrame =
-    maxVal.toSeq.sortBy(_._1).foldLeft(df) { case (d, (c, m)) =>
-      if (m == 0.0 || m.isNaN) d.withColumn(c, col(c).cast("double"))
-      else d.withColumn(c, col(c).cast("double") / lit(m))
-    }
+    df.withColumns(ListMap(maxVal.toSeq.sortBy(_._1).map { case (c, m) =>
+      val v = col(c).cast("double")
+      c -> (if (m == 0.0 || m.isNaN) v else v / lit(m))
+    }: _*))
 
-  /** Feature-prep stages shared by fit and predict: one
-    * StringIndexer+OneHotEncoder pair per categorical column, then a
-    * VectorAssembler over the 8 numeric + 10 encoded features.
+  /** Feature-prep stages shared by fit and predict: one multi-column
+    * StringIndexer and one OneHotEncoder over the categorical columns,
+    * then a VectorAssembler over the 8 numeric + 10 encoded features.
+    * The indexer learns every column's labels in one aggregation and
+    * saves and loads as one stage; the labels, in `alphabetAsc` order,
+    * are the ones ten single-column indexers would learn.
     *
     * Reference bug not reproduced: its `indicator_column` sits outside
     * the vocab loop so only `HD` is actually one-hot encoded
@@ -120,10 +124,10 @@ object PbEtl {
     // strict-compat mode (M4): reproduce the reference's literal
     // behavior — only `HD` one-hot encoded (pb_etl/tasks.py:285-286)
     val cats = if (onlyHd) Seq("HD") else catCol
-    val indexers = cats.map { c =>
-      new StringIndexer().setInputCol(s"${c}_str").setOutputCol(s"${c}_idx")
-        .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
-    }
+    val indexer = new StringIndexer()
+      .setInputCols(cats.map(c => s"${c}_str").toArray)
+      .setOutputCols(cats.map(c => s"${c}_idx").toArray)
+      .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
     val ohe = new OneHotEncoder()
       .setInputCols(cats.map(c => s"${c}_idx").toArray)
       .setOutputCols(cats.map(c => s"${c}_vec").toArray)
@@ -131,13 +135,14 @@ object PbEtl {
     val assembler = new VectorAssembler()
       .setInputCols((numCol ++ cats.map(c => s"${c}_vec")).toArray)
       .setOutputCol("features")
-    (indexers :+ ohe :+ assembler).toArray
+    Array(indexer, ohe, assembler)
   }
 
   /** RES30 is an int64-valued categorical (pb_etl/tasks.py:32,54) —
-    * all categoricals go through a string cast for StringIndexer. */
-  private def withCatStrings(df: DataFrame): DataFrame =
-    catCol.foldLeft(df)((d, c) => d.withColumn(s"${c}_str", col(c).cast("string")))
+    * all categoricals go through a string cast for StringIndexer, in one
+    * projection. */
+  private[graft] def withCatStrings(df: DataFrame): DataFrame =
+    df.withColumns(ListMap(catCol.map(c => s"${c}_str" -> col(c).cast("string")): _*))
 
   /** M1-M5 + M7: normalize, split 80/20, fit the MLP, capture training
     * history and a validation metric on the holdout
@@ -159,68 +164,71 @@ object PbEtl {
         .withColumn("TARGET", col("TARGET").cast("double"))
         .na.fill(0.0, numCol)
       val Array(train, valid) = data.randomSplit(Array(0.8, 0.2), conf.seed)
-      // train is consumed by the feature fits and the classifier's
-      // iterations — cache to avoid re-scanning the parquet per pass
-      train.cache()
+      // every cache this stage takes is released on the way out, also
+      // when a later step throws
+      val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
+      try {
+        // train is consumed by the feature fits and the classifier's
+        // iterations — cache to avoid re-scanning the parquet per pass
+        cache(train)
 
-      // feature stages fit EXACTLY ONCE; the classifier then trains on
-      // the already-transformed frame, and the final PipelineModel is
-      // stitched from the fitted stages (Pipeline.fit over transformers
-      // only copies them — zero extra passes over the data)
-      val prep = new Pipeline().setStages(featureStages(conf.onlyHd)).fit(train)
-      val trainF = prep.transform(train).select(col("features"), col("TARGET")).cache()
-      // layer-0 width from the assembled column's ML attribute metadata
-      // (VectorAssembler always records it) — no extra action
-      val d = org.apache.spark.ml.attribute.AttributeGroup
-        .fromStructField(trainF.schema("features")).size match {
-          case -1 => trainF.head().getAs[Vector]("features").size
-          case n => n
-        }
-      val mlp = new MultilayerPerceptronClassifier()
-        .setLabelCol("TARGET").setFeaturesCol("features")
-        .setLayers((d +: conf.hidden :+ 2).toArray)
-        .setMaxIter(conf.epochs).setSeed(conf.seed)
-      val mlpModel = mlp.fit(trainF)
-      // M7: per-iteration objective (the reference dumps Keras epoch
-      // loss, pb_etl/tasks.py:334-342) ...
-      val losses = scala.util.Try(mlpModel.summary.objectiveHistory.toSeq)
-        .getOrElse(Seq.empty)
-      // ... and a real validation metric on the 20% split the
-      // reference computes-then-discards: AUC is undefined on a
-      // single-class or empty holdout (the 3-row spec fixture), so null
-      // is recorded there rather than a fake number
-      // scored holdout feeds two actions (count/classes agg + AUC):
-      // cache so feature transform + scoring run once, not twice
-      val scoredVal = mlpModel.transform(prep.transform(valid)).cache()
-      val valAgg = scoredVal.agg(count(lit(1)), countDistinct(col("TARGET"))).head()
-      val (valN, valClasses) = (valAgg.getLong(0), valAgg.getLong(1))
-      val valAuc: Option[Double] =
-        if (valClasses == 2) scala.util.Try {
-          new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
-            .setLabelCol("TARGET").setRawPredictionCol("rawPrediction")
-            .setMetricName("areaUnderROC")
-            .evaluate(scoredVal)
-        }.toOption else None
-      val model = new Pipeline()
-        .setStages((prep.stages :+ mlpModel).map(_.asInstanceOf[PipelineStage]))
-        .fit(train) // all stages are Transformers: copy-through, no refit
-      scoredVal.unpersist()
-      trainF.unpersist()
-      train.unpersist()
+        // feature stages fit EXACTLY ONCE; the classifier then trains on
+        // the already-transformed frame, and the final PipelineModel is
+        // stitched from the fitted stages (Pipeline.fit over transformers
+        // only copies them — zero extra passes over the data)
+        val prep = new Pipeline().setStages(featureStages(conf.onlyHd)).fit(train)
+        val trainF = cache(prep.transform(train).select(col("features"), col("TARGET")))
+        // layer-0 width from the assembled column's ML attribute metadata
+        // (VectorAssembler always records it) — no extra action
+        val d = org.apache.spark.ml.attribute.AttributeGroup
+          .fromStructField(trainF.schema("features")).size match {
+            case -1 => trainF.head().getAs[Vector]("features").size
+            case n => n
+          }
+        val mlp = new MultilayerPerceptronClassifier()
+          .setLabelCol("TARGET").setFeaturesCol("features")
+          .setLayers((d +: conf.hidden :+ 2).toArray)
+          .setMaxIter(conf.epochs).setSeed(conf.seed)
+        val mlpModel = mlp.fit(trainF)
+        // M7: per-iteration objective (the reference dumps Keras epoch
+        // loss, pb_etl/tasks.py:334-342) ...
+        val losses = scala.util.Try(mlpModel.summary.objectiveHistory.toSeq)
+          .getOrElse(Seq.empty)
+        // ... and a real validation metric on the 20% split the
+        // reference computes-then-discards: AUC is undefined on a
+        // single-class or empty holdout (the 3-row spec fixture), so null
+        // is recorded there rather than a fake number
+        // scored holdout feeds two actions (count/classes agg + AUC):
+        // cache so feature transform + scoring run once, not twice
+        val scoredVal = cache(mlpModel.transform(prep.transform(valid)))
+        val valAgg = scoredVal.agg(count(lit(1)), countDistinct(col("TARGET"))).head()
+        val (valN, valClasses) = (valAgg.getLong(0), valAgg.getLong(1))
+        val valAuc: Option[Double] =
+          if (valClasses == 2) scala.util.Try {
+            new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
+              .setLabelCol("TARGET").setRawPredictionCol("rawPrediction")
+              .setMetricName("areaUnderROC")
+              .evaluate(scoredVal)
+          }.toOption else None
+        val model = new Pipeline()
+          .setStages((prep.stages :+ mlpModel).map(_.asInstanceOf[PipelineStage]))
+          .fit(train) // all stages are Transformers: copy-through, no refit
 
-      val dir = outputDir(ctx).get
-      model.write.overwrite().save(s"$dir/model")
-      // K4: training-history JSON; salted dir makes re-runs clean
-      // (the reference's makedirs crash, SURVEY.md §7.4.7, has no analog)
-      val hist =
-        s"""{"layers":[${(d +: conf.hidden :+ 2).mkString(",")}],""" +
-          s""""maxIter":${conf.epochs},"seed":${conf.seed},""" +
-          s""""loss":[${losses.mkString(",")}],""" +
-          s""""val_n":$valN,"val_auc":${valAuc.map(_.toString).getOrElse("null")}}"""
-      val fs = ctx.fs(dir)
-      val out = fs.create(new org.apache.hadoop.fs.Path(dir, "history.json"), true)
-      out.write(hist.getBytes("UTF-8")); out.close()
-      fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
+        val dir = outputDir(ctx).get
+        model.write.overwrite().save(s"$dir/model")
+        // K4: training-history JSON; salted dir makes re-runs clean
+        // (the reference's makedirs crash, SURVEY.md §7.4.7, has no analog)
+        val hist =
+          s"""{"layers":[${(d +: conf.hidden :+ 2).mkString(",")}],""" +
+            s""""maxIter":${conf.epochs},"seed":${conf.seed},""" +
+            s""""loss":[${losses.mkString(",")}],""" +
+            s""""val_n":$valN,"val_auc":${valAuc.map(_.toString).getOrElse("null")}}"""
+        val fs = ctx.fs(dir)
+        val out = fs.create(new org.apache.hadoop.fs.Path(dir, "history.json"), true)
+        out.write(hist.getBytes("UTF-8")); out.close()
+        fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
+      } finally cached.reverseIterator.foreach(_.unpersist())
     }
 
     def load(ctx: Ctx): PipelineModel =

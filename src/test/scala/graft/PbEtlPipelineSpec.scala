@@ -149,11 +149,17 @@ class PbEtlPipelineSpec extends SparkSpec {
   }
 
   test("M4 strict-compat: onlyHd assembles numeric + single HD indicator only") {
-    import org.apache.spark.ml.Pipeline
+    import org.apache.spark.ml.{Pipeline, PipelineStage}
     import org.apache.spark.ml.attribute.AttributeGroup
+    import org.apache.spark.ml.classification.MultilayerPerceptronClassificationModel
+    import org.apache.spark.ml.feature.{OneHotEncoderModel, StringIndexer, StringIndexerModel, VectorAssembler}
+    import org.apache.spark.ml.linalg.Vector
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import scala.collection.immutable.ListMap
     val data = PbEtl.theNorm(PbEtl.LoadData.read(ctx), PbEtl.NormDenominators.maxMap(ctx))
-    val withStrings = Schemas.catCol.foldLeft(data)((d, c) =>
-      d.withColumn(s"${c}_str", d(c).cast("string"))).na.fill(0.0, Schemas.numCol)
+    val withStrings = PbEtl.withCatStrings(data).na.fill(0.0, Schemas.numCol)
+    assert(withStrings.columns.toSeq == data.columns.toSeq ++ Schemas.catCol.map(c => s"${c}_str"))
     def width(onlyHd: Boolean): Int = {
       val out = new Pipeline().setStages(PbEtl.featureStages(onlyHd))
         .fit(withStrings).transform(withStrings)
@@ -168,6 +174,50 @@ class PbEtlPipelineSpec extends SparkSpec {
     assert(intended > strict) // all 10 categoricals encoded
     // and the fitted salt distinguishes the modes (different model dirs)
     assert(PbEtl.FitModel.salt(ctx.conf) != PbEtl.FitModel.salt(ctx.conf.copy(onlyHd = true)))
+
+    // the one multi-column indexer yields the features of ten
+    // single-column ones; a second label per column (sorting before the
+    // fixture's) and an unseen one at transform time exercise the
+    // alphabetAsc order and the keep bucket
+    def relabel(df: DataFrame, prefix: String): DataFrame =
+      df.withColumns(ListMap(Schemas.catCol.map(c =>
+        s"${c}_str" -> concat(lit(prefix), col(s"${c}_str"))): _*))
+    val oneRow = withStrings.filter(col("TRANSACTION_ID") === 109785L)
+    val fitOn = withStrings.union(relabel(oneRow, "0"))
+    val scoreOn = fitOn.union(relabel(oneRow, "~"))
+    def features(stages: Array[PipelineStage]): Seq[(Long, Vector)] =
+      new Pipeline().setStages(stages).fit(fitOn).transform(scoreOn)
+        .select("TRANSACTION_ID", "features").collect()
+        .map(r => (r.getLong(0), r.getAs[Vector](1))).toSeq.sortBy(_.toString)
+    for (onlyHd <- Seq(false, true)) {
+      val one = PbEtl.featureStages(onlyHd)
+      val ten = one.head.asInstanceOf[StringIndexer].getInputCols.map { in =>
+        new StringIndexer().setInputCol(in).setOutputCol(in.stripSuffix("_str") + "_idx")
+          .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
+      } ++ one.tail
+      assert(one.length == 3 && ten.length == (if (onlyHd) 1 else 10) + 2)
+      assert(features(one) == features(ten), s"onlyHd=$onlyHd")
+    }
+
+    // the saved model is one stage per step: indexer, encoder,
+    // assembler, MLP
+    val saved = PbEtl.FitModel.load(ctx).stages
+    assert(saved.length == 4, saved.map(_.getClass.getSimpleName).mkString(","))
+    assert(saved(0).isInstanceOf[StringIndexerModel] && saved(1).isInstanceOf[OneHotEncoderModel] &&
+      saved(2).isInstanceOf[VectorAssembler] &&
+      saved(3).isInstanceOf[MultilayerPerceptronClassificationModel])
+    assert(saved(0).asInstanceOf[StringIndexerModel].labelsArray.length == Schemas.catCol.length)
+  }
+
+  test("FitModel releases its caches when a step after the first cache throws") {
+    // a zero-width hidden layer is rejected by the MLP after the feature
+    // fits have materialized the cached training split
+    val bad = ctx.copy(conf = ctx.conf.copy(hidden = Seq(0)))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    intercept[IllegalArgumentException](Runner.run(bad, PbEtl.FitModel))
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"persistent RDDs left behind: $left")
+    assert(!PbEtl.FitModel.complete(bad))
   }
 
   test("salt: deterministic, version-sensitive, lineage-sensitive (O3)") {
