@@ -1828,7 +1828,7 @@ object Dedup {
     // |grid| × 2 driver-synchronized action barriers and each job's
     // straggler tail left the executor idle; concurrently the wall
     // cost is ~the slowest grid point and the next point's tasks
-    // back-fill the tail. |grid| = 3 bounds both the thread pool and
+    // back-fill the tail. |grid| = 3 bounds both the threads and
     // the peak persist footprint (3 shingle relations ≤ 3× the n=8
     // one the sequential form already held).
     def gridPoint(n: Int): (Long, Long, Long, Long, Long, Long) = {
@@ -1867,15 +1867,9 @@ object Dedup {
           if (within + cross == 0L) 0L else 1000L * cross / (within + cross))
       } finally { g.unpersist(); dfRel.unpersist() }
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(AblationNs.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val rows =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          AblationNs.map(n => scala.concurrent.Future(gridPoint(n)))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
+    // a failing grid point cancels the other two's jobs and surfaces
+    // its own error
+    val rows = Parallel.all(spark.sparkContext, AblationNs.map(n => () => gridPoint(n)))
     val s = spark
     import s.implicits._
     rows.toDF("n", "grams_distinct", "grams_dropped", "pairs_within",

@@ -148,7 +148,13 @@ object PbEtl {
     * history and a validation metric on the holdout
     * (pb_etl/tasks.py:247-345). MLlib's MLP has a 2-unit softmax head
     * (≡ 1-unit sigmoid for 2 classes) and no dropout — accepted
-    * divergences (SURVEY.md §7.4.2); epochs → maxIter. */
+    * divergences (SURVEY.md §7.4.2); epochs → maxIter.
+    *
+    * The fitted model is saved while the holdout is scored
+    * ([[graft.Parallel]]); `history.json` and `_SUCCESS` follow only when
+    * both succeed. After `_SUCCESS`, the model stays in memory for
+    * [[FitModel.load]], so Predict in the same JVM does not read back
+    * what was just written. */
   object FitModel extends Stage {
     override def deps: Seq[Stage] = Seq(LoadData, NormDenominators)
     override def params(conf: PbConf): Seq[(String, String)] = Seq(
@@ -158,6 +164,7 @@ object PbEtl {
       "onlyHd" -> conf.onlyHd.toString)
 
     def run(ctx: Ctx): Unit = {
+      saved = None // the dir may be rewritten below
       val conf = ctx.conf
       val maxes = NormDenominators.maxMap(ctx)
       val data = withCatStrings(theNorm(LoadData.read(ctx), maxes))
@@ -192,31 +199,37 @@ object PbEtl {
           .setMaxIter(conf.epochs).setSeed(conf.seed)
         val mlpModel = mlp.fit(trainF)
         // M7: per-iteration objective (the reference dumps Keras epoch
-        // loss, pb_etl/tasks.py:334-342) ...
+        // loss, pb_etl/tasks.py:334-342)
         val losses = scala.util.Try(mlpModel.summary.objectiveHistory.toSeq)
           .getOrElse(Seq.empty)
-        // ... and a real validation metric on the 20% split the
-        // reference computes-then-discards: AUC is undefined on a
-        // single-class or empty holdout (the 3-row spec fixture), so null
-        // is recorded there rather than a fake number
-        // scored holdout feeds two actions (count/classes agg + AUC):
-        // cache so feature transform + scoring run once, not twice
-        val scoredVal = cache(mlpModel.transform(prep.transform(valid)))
-        val valAgg = scoredVal.agg(count(lit(1)), countDistinct(col("TARGET"))).head()
-        val (valN, valClasses) = (valAgg.getLong(0), valAgg.getLong(1))
-        val valAuc: Option[Double] =
-          if (valClasses == 2) scala.util.Try {
-            new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
-              .setLabelCol("TARGET").setRawPredictionCol("rawPrediction")
-              .setMetricName("areaUnderROC")
-              .evaluate(scoredVal)
-          }.toOption else None
         val model = new Pipeline()
           .setStages((prep.stages :+ mlpModel).map(_.asInstanceOf[PipelineStage]))
           .fit(train) // all stages are Transformers: copy-through, no refit
 
         val dir = outputDir(ctx).get
-        model.write.overwrite().save(s"$dir/model")
+        // the save and the holdout scoring are independent: run them at
+        // once, so the save's small jobs fill cores the scoring leaves
+        // idle. `cached` grows on the scoring thread while this one
+        // waits; `both` joins it before the finally below reads it.
+        val (_, (valN, valAuc)) = graft.Parallel.both(ctx.spark.sparkContext)(
+          model.write.overwrite().save(s"$dir/model"), {
+            // M7: a real validation metric on the 20% split the
+            // reference computes-then-discards: AUC is undefined on a
+            // single-class or empty holdout (the 3-row spec fixture), so
+            // null is recorded there rather than a fake number. The
+            // scored holdout feeds two actions (count/classes agg + AUC):
+            // cache so feature transform + scoring run once, not twice
+            val scoredVal = cache(mlpModel.transform(prep.transform(valid)))
+            val valAgg = scoredVal.agg(count(lit(1)), countDistinct(col("TARGET"))).head()
+            val auc: Option[Double] =
+              if (valAgg.getLong(1) == 2) scala.util.Try {
+                new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
+                  .setLabelCol("TARGET").setRawPredictionCol("rawPrediction")
+                  .setMetricName("areaUnderROC")
+                  .evaluate(scoredVal)
+              }.toOption else None
+            (valAgg.getLong(0), auc)
+          })
         // K4: training-history JSON; salted dir makes re-runs clean
         // (the reference's makedirs crash, SURVEY.md §7.4.7, has no analog)
         val hist =
@@ -228,11 +241,22 @@ object PbEtl {
         val out = fs.create(new org.apache.hadoop.fs.Path(dir, "history.json"), true)
         out.write(hist.getBytes("UTF-8")); out.close()
         fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
+        saved = Some(dir -> model)
       } finally cached.reverseIterator.foreach(_.unpersist())
     }
 
-    def load(ctx: Ctx): PipelineModel =
-      PipelineModel.load(s"${outputDir(ctx).get}/model")
+    /** The model this JVM saved last, with its output dir. */
+    @volatile private var saved: Option[(String, PipelineModel)] = None
+
+    /** The fitted model, behind the S4 read gate. When this JVM's last
+      * FitModel run wrote this dir, the model it kept is handed over —
+      * the same weights, labels and sizes a load would read back;
+      * otherwise (a fresh JVM, another dir) it is loaded from disk. */
+    def load(ctx: Ctx): PipelineModel = {
+      val dir = completeDir(ctx)
+      saved.collect { case (`dir`, m) => m }
+        .getOrElse(PipelineModel.load(s"$dir/model"))
+    }
   }
 
   /** M6/P4: score the forecast set; Y_hat = P(class=1)

@@ -1,7 +1,10 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Pipeline configuration.
   *
@@ -76,16 +79,52 @@ trait Stage {
 
   def run(ctx: Ctx): Unit
 
-  /** Convenience: this stage's materialized output as a DataFrame.
-    *
-    * S4 read gate: refuses to read an incomplete target — a dir without
-    * its `_SUCCESS` flag is a partial/failed write (the reference's
-    * read_dask raises the same way, pb_etl/luigi/dask/target.py:139-148). */
-  def read(ctx: Ctx): DataFrame = {
+  /** This stage's output dir, after the S4 read gate: refuses an
+    * incomplete target — a dir without its `_SUCCESS` flag is a
+    * partial/failed write (the reference's read_dask raises the same
+    * way, pb_etl/luigi/dask/target.py:139-148). */
+  protected def completeDir(ctx: Ctx): String = {
     val d = outputDir(ctx).getOrElse(sys.error(s"stage $name has no output dir"))
     require(complete(ctx),
       s"stage $name output at $d is incomplete (no _SUCCESS flag) — not reading a partial write")
-    ctx.spark.read.parquet(d)
+    d
+  }
+
+  /** Convenience: this stage's materialized output as a DataFrame,
+    * behind the S4 read gate.
+    *
+    * The schema comes from the parquet footer of the dir's first part
+    * file (see [[Stage.footerSchema]]), read on the driver: without it,
+    * `spark.read.parquet` runs a schema-inference Spark job on every
+    * read, even of a single file. */
+  def read(ctx: Ctx): DataFrame = {
+    val d = completeDir(ctx)
+    ctx.spark.read.schema(Stage.footerSchema(ctx, d)).parquet(d)
+  }
+}
+
+object Stage {
+  /** Footer key under which Spark's parquet writer stores the row
+    * schema as JSON. */
+  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The Spark schema stored in the footer of `dir`'s first `part-*`
+    * file by path — the file Spark's own inference reads when schemas
+    * are not merged, so the result is the schema `spark.read.parquet`
+    * would infer. Spark writes every stage dir, so the key is always
+    * there; a dir without it is refused, not read another way. */
+  private def footerSchema(ctx: Ctx, dir: String): StructType = {
+    val fs = ctx.fs(dir)
+    val part = Option(fs.globStatus(new Path(dir, "part-*"))).toSeq.flatten
+      .map(_.getPath).sortBy(_.toString).headOption
+      .getOrElse(sys.error(s"no part-* file under $dir"))
+    val in = ParquetFileReader.open(
+      HadoopInputFile.fromPath(part, ctx.spark.sparkContext.hadoopConfiguration))
+    val json =
+      try in.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey)
+      finally in.close()
+    require(json != null, s"$part under $dir has no Spark schema ($RowMetadataKey) in its footer")
+    DataType.fromJson(json).asInstanceOf[StructType]
   }
 }
 

@@ -106,6 +106,60 @@ class PbEtlPipelineSpec extends SparkSpec {
     assert(rows.map(_.getLong(0)).sorted.toSeq == Seq(275450L, 275451L, 275452L))
   }
 
+  test("Predict scores with the handed-over model: Y_hat bit-identical to a disk load") {
+    import org.apache.spark.ml.PipelineModel
+    import org.apache.spark.ml.functions.vector_to_array
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    // in the JVM that fitted it, load returns the kept model, not a new read
+    assert(PbEtl.FitModel.load(ctx) eq PbEtl.FitModel.load(ctx))
+    def bits(df: DataFrame): Map[Long, Long] = df.collect()
+      .map(r => r.getLong(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
+    val tst = PbEtl.withCatStrings(
+      PbEtl.theNorm(PbEtl.LoadTest.read(ctx), PbEtl.NormDenominators.maxMap(ctx)))
+      .na.fill(0.0, Schemas.numCol)
+    val fromDisk = PipelineModel.load(s"${PbEtl.FitModel.outputDir(ctx).get}/model")
+      .transform(tst)
+      .select(col("TRANSACTION_ID"), vector_to_array(col("probability")).getItem(1))
+    val predicted = bits(PbEtl.Predict.read(ctx))
+    assert(predicted.size == 3)
+    assert(predicted == bits(fromDisk))
+  }
+
+  /** `body`'s result and the Spark jobs it started, counted by a
+    * listener. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"jobs-of-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) n.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    sc.addJobTag(tag)
+    val out = try body finally sc.removeJobTag(tag)
+    org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+    sc.removeSparkListener(counter)
+    (out, n.get)
+  }
+
+  test("read takes the schema from the parquet footer: the inferred one, and no inference job") {
+    for (s <- Seq(PbEtl.LoadData, PbEtl.LoadTest, PbEtl.NormDenominators, PbEtl.Predict,
+        PbEtl.BackTest)) {
+      val inferred = spark.read.parquet(s.outputDir(ctx).get).schema
+      assert(s.read(ctx).schema == inferred, s.name)
+      // building the DataFrame starts no job; counting it starts only
+      // the count's own
+      val (df, readJobs) = jobsOf(s.read(ctx))
+      assert(readJobs == 0, s.name)
+      val (_, countJobs) = jobsOf(df.count())
+      assert(jobsOf(s.read(ctx).count())._2 == countJobs, s.name)
+    }
+  }
+
   test("BackTest joins actuals to predictions (3 rows, no lost keys)") {
     val df = PbEtl.BackTest.read(ctx)
     assert(df.count() == 3)
@@ -134,6 +188,15 @@ class PbEtlPipelineSpec extends SparkSpec {
       assert(e.getMessage.contains("_SUCCESS"))
     } finally fs.create(flag, true).close()
     assert(PbEtl.LoadData.read(ctx).count() == 3) // restored flag reads again
+
+    // the fitted model is gated the same way, handed over or not
+    val modelFlag = new org.apache.hadoop.fs.Path(PbEtl.FitModel.outputDir(ctx).get, "_SUCCESS")
+    assert(fs.delete(modelFlag, false))
+    try {
+      val e = intercept[IllegalArgumentException](PbEtl.FitModel.load(ctx))
+      assert(e.getMessage.contains("_SUCCESS"))
+    } finally fs.create(modelFlag, true).close()
+    assert(PbEtl.FitModel.load(ctx).stages.length == 4)
   }
 
   test("K5: optional JDBC sink appends the result row (embedded Derby)") {
@@ -218,6 +281,24 @@ class PbEtlPipelineSpec extends SparkSpec {
     val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(left.isEmpty, s"persistent RDDs left behind: $left")
     assert(!PbEtl.FitModel.complete(bad))
+  }
+
+  test("FitModel throws, writes no _SUCCESS and releases its caches when its save fails") {
+    // a regular file where the output dir should be: only the save
+    // fails, the holdout scoring running beside it never touches the dir
+    val bad = ctx.copy(conf = ctx.conf.copy(seed = 7L))
+    val dir = new org.apache.hadoop.fs.Path(PbEtl.FitModel.outputDir(bad).get)
+    val fs = bad.fs(dir.toString)
+    fs.create(dir, true).close()
+    try {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      intercept[Exception](Runner.run(bad, PbEtl.FitModel))
+      val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      assert(left.isEmpty, s"persistent RDDs left behind: $left")
+      assert(!PbEtl.FitModel.complete(bad))
+      assert(fs.isFile(dir)) // nothing was written in its place
+      intercept[IllegalArgumentException](PbEtl.FitModel.load(bad))
+    } finally fs.delete(dir, false)
   }
 
   test("salt: deterministic, version-sensitive, lineage-sensitive (O3)") {
